@@ -148,6 +148,10 @@ def remove_repeated_spans(
     text is the final doc-keyed equi-join (unique key, skew-free) with
     an in-place array filter.  ``stride`` thins detection AND removal by
     the same content rule, so they stay consistent under subsampling."""
+    if span_words < 2:
+        raise ValueError(f"span_words must be >= 2, got {span_words}")
+    if stride < 1:
+        raise ValueError(f"stride must be >= 1, got {stride}")
     out = output_col or text_col
     # ONE span scan shared by detection and removal: the former shape ran
     # ``_span_tuples`` twice (once here, once inside ``repeated_spans``),

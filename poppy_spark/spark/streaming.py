@@ -21,6 +21,17 @@ from pyspark.sql import DataFrame, functions as F
 from poppy_spark.sketches.base import Sketch
 
 
+def _empty_state_bytes(factory: Callable[[], Sketch]) -> int:
+    """State size of a fresh sketch.  A Bloom filter's arrays are allocated
+    untouched, so its ``size_in_bytes`` is free; serializing it would write
+    every page of a filter the size guards exist to refuse (7 GB of RSS at
+    10^9 keys and fpp 1e-6)."""
+    sk0 = factory()
+    filt = getattr(sk0, "filter", None)
+    size = getattr(filt, "size_in_bytes", None)
+    return (size() if callable(size) else size) if size is not None else len(sk0.dumps())
+
+
 class StreamingSketch:
     """Maintains one merged sketch across micro-batches.
 
@@ -51,10 +62,7 @@ class StreamingSketch:
         col: str = "value",
         max_state_bytes: int = 1 << 30,
     ):
-        sk0 = factory()
-        filt = getattr(sk0, "filter", None)
-        size = getattr(filt, "size_in_bytes", None)
-        est = (size() if callable(size) else size) if size is not None else len(sk0.dumps())
+        est = _empty_state_bytes(factory)
         if est > max_state_bytes:
             raise ValueError(
                 f"sketch state is ~{est} bytes; StreamingSketch folds the "
@@ -253,8 +261,7 @@ class BloomStreamDedup:
         out_path: str,
         max_state_bytes: int = 1 << 30,
     ):
-        sk0 = factory()
-        est = len(sk0.dumps())
+        est = _empty_state_bytes(factory)
         if est > max_state_bytes:
             raise ValueError(
                 f"filter state is ~{est} bytes; BloomStreamDedup probes and "

@@ -7,7 +7,9 @@ import pytest
 def spark():
     from poppy_spark.spark.session import get_spark
 
-    s = get_spark(app_name="poppy-spark-tests", master="local[8]", shuffle_partitions=8)
+    # the tier-1 command exports the host's core count here
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
+    s = get_spark(app_name="poppy-spark-tests", master=f"local[{cpus}]", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -448,6 +448,19 @@ class TestRemoveRepeatedSpans:
             (r["doc_id"], r["text"]) for r in b.collect()
         )
 
+    @pytest.mark.parametrize(
+        "kw, match",
+        [({"span_words": 1}, "span_words"), ({"stride": 0}, "stride")],
+    )
+    def test_rejects_bad_span_words_and_stride(self, spark, kw, match):
+        """Same guards as ``repeated_spans``: stride=0 would otherwise make
+        the winnowing ``% stride`` NULL and return the corpus unmodified."""
+        from poppy_spark.spark.spans import remove_repeated_spans
+
+        df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+        with pytest.raises(ValueError, match=match):
+            remove_repeated_spans(df, "text", "doc_id", **kw)
+
 
 class TestPngCodec:
     def test_roundtrip_gray_rgb_rgba(self):

@@ -76,10 +76,15 @@ class TestBloomStreamDedup:
         got = sorted(r["key"] for r in spark.read.parquet(out).collect())
         assert got == ["a", "b", "c"]  # batch=1 dir was overwritten, not doubled
 
-    def test_size_guard(self, tmp_path):
+    def test_size_guard(self, tmp_path, monkeypatch):
         from poppy_spark.sketches import BloomSketch
         from poppy_spark.spark.streaming import BloomStreamDedup
 
+        def no_dumps(self):
+            raise AssertionError("sizing serialized the 3.6 GB filter")
+
+        # the guard must size the refused filter without writing its pages
+        monkeypatch.setattr(BloomSketch, "dumps", no_dumps)
         with pytest.raises(ValueError, match="ShardedBloomStream"):
             BloomStreamDedup(
                 str(tmp_path / "s"), BloomSketch.factory(10**9, 1e-6), "key",
